@@ -114,6 +114,11 @@ _WINDOW_PRIORITY = [
     "d209_nsw_augmented_recall",
     "d216_nsw_layered_search",
     "d217_nsw_layered_recall",
+    # plans/wave68.py, plans/wave76.py: the streaming checkpoint dirs
+    # now come from ``_fresh_root`` (removed at process exit) instead
+    # of a bare mkdtemp that leaked one temp dir per run. Same batches.
+    "s16_txnlog_readstream_batches",
+    "s17_exactly_once_txn_sink",
 ]
 
 # Round-11 window (kept for fall-through ordering continuity; all

@@ -17,6 +17,13 @@ becomes four explicit stages over shared DataFrames:
 The reference's 5-minute SQS delay (T4) is a race-avoidance hack; the
 explicit stage ordering here replaces it (documented behavioral
 difference: we always rebuild *after* extraction completes).
+
+State under ``state_dir`` is append-only: ``silver_matchwise`` and
+``silver_deliverywise`` gain only rows whose natural key is absent, and
+the ``file_status`` ledger gains one row per file after both inserts.
+A cycle writes O(new files). Every step is idempotent on its key, so a
+crash anywhere leaves the files unledgered and the rerun converges to
+the same published CSVs without a staging copy or a transaction log.
 """
 
 from __future__ import annotations
@@ -24,6 +31,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,13 +42,7 @@ from .materialize import (
     write_sorted_csv,
 )
 from .operators import flatten
-from .operators.ledger import (
-    DELIVERYWISE_FLAG,
-    MATCHWISE_FLAG,
-    detect_new_files,
-    read_ledger,
-    upsert_status,
-)
+from .operators.ledger import detect_new_files, read_ledger, upsert_status
 from .schemas import CRICSHEET_MATCH_SCHEMA
 from .sources.readers import read_json_documents
 
@@ -58,8 +61,9 @@ def list_candidate_files(spark: SparkSession, landing_dir: str) -> DataFrame:
     names = [
         f for f in sorted(os.listdir(landing_dir)) if f.endswith(".json")
     ]
+    # Arrow, not a list of tuples: the latter round-trips a Python worker.
     return spark.createDataFrame(
-        [(n,) for n in names], "file_name STRING"
+        pa.table({"file_name": pa.array(names, pa.string())})
     )
 
 
@@ -80,12 +84,6 @@ def run_incremental(
     n_corrupt = 0
 
     if new_names:
-        # Cut lineage: the ledger files this plan read get rewritten by the
-        # status upserts below; a local frame of the collected names (file-
-        # count-sized, bounded by max_files_per_cycle) is the stable input.
-        new_files_local = spark.createDataFrame(
-            [(n,) for n in new_names], "file_name STRING"
-        )
         paths = [os.path.join(landing_dir, n) for n in new_names]
         # T3: one scan, two consumers — cache the parsed documents so the
         # matchwise and deliverywise branches don't each re-read the
@@ -104,23 +102,22 @@ def run_incremental(
         raw = scanned.filter(F.col("info").isNotNull())
         n_corrupt = scanned.count() - raw.count()
         try:
-            new_matches = flatten.matchwise(raw)
-            new_deliveries = flatten.composite_delivery_key(
-                flatten.deliverywise(raw)
+            _insert_absent(
+                flatten.matchwise(raw),
+                f"{state_dir}/silver_matchwise",
+                "match_id",
             )
-            _append_dedup(
-                spark, new_matches, f"{state_dir}/silver_matchwise", ["match_id"]
-            )
-            upsert_status(spark, state_dir, new_files_local, MATCHWISE_FLAG)
-            _append_dedup(
-                spark,
-                new_deliveries,
+            _insert_absent(
+                flatten.composite_delivery_key(flatten.deliverywise(raw)),
                 f"{state_dir}/silver_deliverywise",
-                ["composite_delivery_key"],
+                "composite_delivery_key",
             )
-            upsert_status(spark, state_dir, new_files_local, DELIVERYWISE_FLAG)
         finally:
             scanned.unpersist()
+        # Last state write of the cycle: until it lands the files stay
+        # unledgered, and a rerun re-inserts nothing the anti-joins
+        # above already committed.
+        upsert_status(spark, state_dir, new_names)
 
     matches = spark.read.parquet(f"{state_dir}/silver_matchwise")
     deliveries = spark.read.parquet(f"{state_dir}/silver_deliverywise")
@@ -144,27 +141,19 @@ def run_incremental(
     )
 
 
-def _append_dedup(
-    spark: SparkSession, df: DataFrame, path: str, keys: list[str]
-) -> None:
-    """K2/K3 + T7: idempotent append — natural-key dedup against existing
-    data reproduces Mongo's ``_id`` conflict-not-duplicate semantics."""
+def _insert_absent(df: DataFrame, path: str, key: str) -> None:
+    """K2/K3 + T7: insert-if-absent on the natural key — Mongo's ``_id``
+    conflict-not-duplicate semantics. Only the new rows are written, so
+    the cost follows the batch, not the table; rows already stored win
+    over a replayed or re-landed copy."""
+    fresh = df.dropDuplicates([key])
     try:
-        spark.catalog.refreshByPath(path)
-        existing = spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first write
-        df.write.mode("overwrite").parquet(path)
-        return
-    staging = path + ".staging"
-    (
-        df.unionByName(existing)
-        .dropDuplicates(keys)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    spark.catalog.refreshByPath(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-    spark.catalog.refreshByPath(path)
+        existing = df.sparkSession.read.parquet(path).select(key)
+    except AnalysisException:  # first write: no table yet
+        pass
+    else:
+        fresh = fresh.join(existing, key, "left_anti")
+    fresh.write.mode("append").parquet(path)
 
 
 def version_notes(matches_numbered: DataFrame) -> dict:

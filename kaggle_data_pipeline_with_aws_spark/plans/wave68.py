@@ -27,7 +27,6 @@ surface.
 
 from __future__ import annotations
 
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,7 +112,7 @@ def _drain_via_readstream(
         .option("onRewrite", "adds")
         .load()
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="s16-ck-"))
+        .option("checkpointLocation", _fresh_root("s16-ck-"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )

@@ -32,7 +32,6 @@ upgraded to a lakehouse sink — beyond-reference surface.
 
 from __future__ import annotations
 
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,7 +85,7 @@ def _drain_into_sink_readstream(
         .option("onRewrite", "adds")
         .load()
         .writeStream.foreachBatch(sink_fn)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="s17-ck-"))
+        .option("checkpointLocation", _fresh_root("s17-ck-"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )

@@ -13,6 +13,12 @@ semantics:
   are cluster-location-independent.
 - Arrow enabled for the (rare) pandas-interchange paths: the multimodal /
   embedding Pandas UDFs.
+- A codegen class cache of 1000 entries (Spark's default is 100). One
+  weekly cycle plus the notebook queries generates ~110 distinct
+  classes and one registry pass ~156; an LRU cache smaller than the
+  working set it replays misses on every entry, so each cycle would
+  recompile every class. The cap is static: it is read when the session
+  starts.
 """
 
 from __future__ import annotations
@@ -69,6 +75,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Only force local master when nothing supplied one (spark-submit on a
     # cluster sets spark.master itself).

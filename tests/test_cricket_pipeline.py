@@ -4,20 +4,32 @@ must be tested (golden semantics, not golden bytes)."""
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
+import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from kaggle_data_pipeline_with_aws_spark import pipeline
 from kaggle_data_pipeline_with_aws_spark.operators import flatten
 from kaggle_data_pipeline_with_aws_spark.pipeline import (
     list_candidate_files,
     run_incremental,
     version_notes,
 )
-from kaggle_data_pipeline_with_aws_spark.schemas import CRICSHEET_MATCH_SCHEMA
-from kaggle_data_pipeline_with_aws_spark.sources.readers import read_json_documents
+from kaggle_data_pipeline_with_aws_spark.plans import cricket_analytics as ca
+from kaggle_data_pipeline_with_aws_spark.schemas import (
+    CRICSHEET_MATCH_SCHEMA,
+    MATCHWISE_SCHEMA,
+)
+from kaggle_data_pipeline_with_aws_spark.sources.readers import (
+    read_csv,
+    read_json_documents,
+)
 
 from cricket_fixtures import write_fixture_dir
 
@@ -285,3 +297,190 @@ def test_ingest_extract_zip_lands_only_json(spark, tmp_path):
     raw = read_json_documents(spark, landing, CRICSHEET_MATCH_SCHEMA)
     assert raw.count() == 3
     assert raw.filter(F.col("info").isNotNull()).count() == 3
+
+
+# -- crash convergence: append-only state keyed on natural keys ---------
+
+
+class _Crash(Exception):
+    pass
+
+
+def _cycle(spark, landing, state, out):
+    """One weekly cycle publishing one CSV object per table: the
+    reference's artifact, and the mode whose bytes are reproducible (the
+    multi-file split comes from Spark's range sampling, which is seeded
+    by RDD id and so differs between two uninterrupted runs as well)."""
+    return run_incremental(
+        spark, landing, state, out, max_files_per_cycle=10, single_file_csv=True
+    )
+
+
+def _published(out):
+    """Bytes of every published part file, per table, in file order."""
+    return {
+        table: [
+            Path(p).read_bytes()
+            for p in sorted(glob.glob(f"{out}/{table}/part-*"))
+        ]
+        for table in ("matchwise_data", "deliverywise_data")
+    }
+
+
+def _state_files(state):
+    """relative path -> (mtime_ns, size, sha256) of every state file."""
+    out = {}
+    for d, _, files in os.walk(state):
+        for f in files:
+            p = os.path.join(d, f)
+            digest = hashlib.sha256(Path(p).read_bytes()).hexdigest()
+            st = os.stat(p)
+            out[os.path.relpath(p, state)] = (st.st_mtime_ns, st.st_size, digest)
+    return out
+
+
+def _silver_rows_and_keys(spark, state):
+    got = {}
+    for table, key in (
+        ("silver_matchwise", "match_id"),
+        ("silver_deliverywise", "composite_delivery_key"),
+    ):
+        df = spark.read.parquet(f"{state}/{table}")
+        got[table] = (df.count(), df.select(key).distinct().count())
+    return got
+
+
+def _copy_state(base, dst):
+    for sub in ("state", "out"):
+        shutil.copytree(f"{base}/{sub}", f"{dst}/{sub}")
+    return f"{dst}/state", f"{dst}/out"
+
+
+@pytest.fixture(scope="module")
+def after_cycle_one(spark, landing, tmp_path_factory):
+    """State and CSVs after the first 10-file cycle over ``landing``, and
+    the published bytes an uninterrupted second cycle makes from them."""
+    base = str(tmp_path_factory.mktemp("cycle_one"))
+    _cycle(spark, landing, f"{base}/state", f"{base}/out")
+    state, out = _copy_state(base, str(tmp_path_factory.mktemp("uninterrupted")))
+    _cycle(spark, landing, state, out)
+    return base, _published(out), _silver_rows_and_keys(spark, state)
+
+
+# pipeline attribute to break, and which of its calls raises (right after
+# the call has done its work)
+_CRASH_POINTS = {
+    "after_matchwise_insert": (
+        "_insert_absent",
+        lambda df, path, key: path.endswith("/silver_matchwise"),
+    ),
+    "after_deliverywise_insert": (
+        "_insert_absent",
+        lambda df, path, key: path.endswith("/silver_deliverywise"),
+    ),
+    "after_ledger_append": ("upsert_status", lambda *args: True),
+    # the matchwise CSV is already rewritten, the deliverywise one not yet
+    "inside_csv_rebuild": (
+        "write_sorted_csv",
+        lambda df, out_dir, *args: out_dir.endswith("/matchwise_data"),
+    ),
+}
+
+
+@pytest.mark.parametrize("point", sorted(_CRASH_POINTS))
+def test_crash_then_rerun_converges(
+    spark, landing, after_cycle_one, tmp_path, monkeypatch, point
+):
+    """A cycle that dies anywhere leaves state a rerun repairs: the
+    published CSVs come out byte-identical to an uninterrupted cycle's,
+    and no silver key is stored twice."""
+    base, want_bytes, want_counts = after_cycle_one
+    state, out = _copy_state(base, str(tmp_path))
+    name, hit = _CRASH_POINTS[point]
+    real = getattr(pipeline, name)
+
+    def crashing(*args, **kwargs):
+        result = real(*args, **kwargs)
+        if hit(*args):
+            raise _Crash(point)
+        return result
+
+    monkeypatch.setattr(pipeline, name, crashing)
+    with pytest.raises(_Crash):
+        _cycle(spark, landing, state, out)
+    monkeypatch.undo()
+
+    rerun = _cycle(spark, landing, state, out)
+    ledgered = point in ("after_ledger_append", "inside_csv_rebuild")
+    assert rerun.n_new_files == (0 if ledgered else 10)
+    assert _published(out) == want_bytes
+    assert _silver_rows_and_keys(spark, state) == want_counts
+
+
+def test_no_new_files_rerun_changes_no_state_file(
+    spark, landing, after_cycle_one, tmp_path
+):
+    base, _, _ = after_cycle_one
+    state, out = _copy_state(base, str(tmp_path))
+    _cycle(spark, landing, state, out)
+    before = _state_files(state)
+    rerun = _cycle(spark, landing, state, out)
+    assert rerun.n_new_files == 0
+    assert _state_files(state) == before
+
+
+def test_relanded_match_adds_no_silver_rows(
+    spark, landing, after_cycle_one, tmp_path
+):
+    """The same match under a new file name (``0100000.json`` carries
+    match_id 100000) is a new file to the ledger but no new silver key."""
+    base, _, _ = after_cycle_one
+    state, out = _copy_state(base, str(tmp_path))
+    relanded = str(tmp_path / "landing")
+    os.makedirs(relanded)
+    for name in sorted(os.listdir(landing))[:10]:  # the ledgered ones
+        shutil.copy(os.path.join(landing, name), relanded)
+    shutil.copy(
+        os.path.join(landing, "100000.json"),
+        os.path.join(relanded, "0100000.json"),
+    )
+    before = _silver_rows_and_keys(spark, state)
+    published = _published(out)
+    result = _cycle(spark, relanded, state, out)
+    assert result.n_new_files == 1
+    assert _silver_rows_and_keys(spark, state) == before
+    assert before["silver_matchwise"] == (10, 10)
+    assert _published(out) == published
+
+
+def test_notebook_queries_compile_no_class_twice(spark, after_cycle_one):
+    """With the codegen cache sized to the working set, a second run of
+    the notebook suite over the same CSV finds every generated class
+    cached."""
+    base, _, _ = after_cycle_one
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+        .getCount
+    )
+    suite = [
+        ca.null_profile,
+        ca.matches_per_year,
+        lambda m: ca.matches_per_year_for_team(m, "India"),
+        ca.all_teams,
+        ca.result_share,
+        ca.toss_decision_distribution,
+        ca.toss_winner_outcome,
+        ca.decision_outcome_breakdown,
+        ca.margin_type_split,
+    ]
+
+    def run_suite():
+        for query in suite:
+            matches = read_csv(spark, f"{base}/out/matchwise_data", MATCHWISE_SCHEMA)
+            query(matches).collect()
+
+    run_suite()
+    n0 = compiles()
+    run_suite()
+    assert compiles() - n0 == 0

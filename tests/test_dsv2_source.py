@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import tempfile
 import time
+from types import SimpleNamespace
 
 import pytest
 
@@ -310,3 +311,27 @@ def test_batch_read_version_is_pinned_across_actions(spark):
     # the pinned snapshot still reads the OLD version, same schema
     assert sorted(r.k for r in df.collect()) == [1, 2]
     assert df.columns == ["k", "v"]
+
+
+def test_s16_s17_leave_temp_dir_unchanged(spark, sf_dir, tmp_path, monkeypatch):
+    """Every temp dir the s16/s17 plans make -- staged tables and
+    stream checkpoints -- is registered for removal at process exit:
+    once those exit hooks run, the temp dir holds what it held before."""
+    from kaggle_data_pipeline_with_aws_spark.plans import registry, wave60
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    exit_hooks = []
+    monkeypatch.setattr(
+        wave60,
+        "atexit",
+        SimpleNamespace(register=lambda fn, *a, **kw: exit_hooks.append((fn, a, kw))),
+    )
+    registry.load_all()
+    for name in ("s16_txnlog_readstream_batches", "s17_exactly_once_txn_sink"):
+        registry.QUERIES[name](spark, sf_dir).collect()
+    assert os.listdir(tmp)  # the plans did stage their tables there
+    for fn, a, kw in exit_hooks:
+        fn(*a, **kw)
+    assert os.listdir(tmp) == []

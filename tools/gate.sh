@@ -15,7 +15,9 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 fail=0
 
 echo "=== gate 1/4: pytest (includes test_all_queries_run_sf0001) ==="
-python -m pytest tests/ -x -q || fail=1
+# -rs: list every skipped test with its reason, so a skip never reads
+# as coverage
+python -m pytest tests/ -x -q -rs || fail=1
 
 echo "=== gate 2/4: oracle result-type audit ==="
 python tools/check_types.py /root/testdata/sf0.001 || fail=1
